@@ -19,6 +19,8 @@ recomputed at assembly, never cached.
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -54,22 +56,38 @@ def empty_cache(spark: SparkSession) -> DataFrame:
 
 
 def load_cache(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet-backed cache; missing path = cold cache (first run)."""
+    """Parquet-backed cache; missing path = cold cache (first run).
+
+    A ``save_cache`` swap a crash cut short is finished first: a
+    complete new cache (the tmp dir with its ``_SUCCESS`` marker) wins,
+    else the old cache moved aside is put back."""
     if not os.path.exists(path):
-        return empty_cache(spark)
+        tmp, old = _swap_dirs(path)
+        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
+            os.rename(tmp, path)
+        elif os.path.exists(old):
+            os.rename(old, path)
+        else:
+            return empty_cache(spark)
     return spark.read.parquet(path)
 
 
 def save_cache(cache: DataFrame, path: str) -> None:
     """The reference flushes Redis at run end (spotify_elt.py:1210);
-    here the flush is one parquet overwrite of the merged cache."""
-    tmp = f"{path}.__tmp__"
+    here the flush is one parquet write of the merged cache, swapped in
+    by renames so a full cache is on disk at every instant."""
+    tmp, old = _swap_dirs(path)
     cache.write.mode("overwrite").parquet(tmp)
-    import shutil
-
+    shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(path):
-        shutil.rmtree(path)
+        os.rename(path, old)
     os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _swap_dirs(path: str) -> tuple[str, str]:
+    """(new cache being written, old cache moved aside)"""
+    return f"{path}.__tmp__", f"{path}.__old__"
 
 
 def cache_entries(matches: DataFrame, videos: DataFrame) -> DataFrame:
@@ -125,73 +143,38 @@ def match_with_cache(
     second pass the same way, cached under the youtube_playlist_id
     key — the reference memoizes that pass per playlist id in the
     same Redis db (spotify_elt.py:863-884)."""
-    spark = videos.sparkSession
-    cache = cache if cache is not None else empty_cache(spark)
-
-    hits = videos.join(cache, "video_id", "inner")
-    misses = videos.join(cache.select("video_id"), "video_id", "left_anti")
-
-    hit_matches = (
-        hits.filter(F.col("payload").isNotNull())  # negative entries: known not-found
-        .join(F.broadcast(playlist_map), "youtube_playlist_id", "left")
-        .withColumn("user_playlist_id", F.coalesce("user_playlist_id", F.lit("LM")))
-        .withColumn("__m__", F.from_json("payload", PAYLOAD_SCHEMA))
-        .select(
+    cache = cache if cache is not None else empty_cache(videos.sparkSession)
+    matches, new_entries = _cached_pass(
+        cache,
+        videos,
+        "video_id",
+        lambda hits: hits.join(F.broadcast(playlist_map), "youtube_playlist_id", "left").select(
             "log_id",
-            "user_playlist_id",
-            *[F.col(f"__m__.{c}").alias(c) for c in PAYLOAD_FIELDS],
+            "payload",
+            F.coalesce("user_playlist_id", F.lit("LM")).alias("user_playlist_id"),
             F.lit(None).cast("array<bigint>").alias("log_ids"),
             F.lit(0).alias("pass_no"),
-        )
+        ),
+        lambda misses: engine.compute_matches(misses, playlist_map),
     )
-    if misses.isEmpty():
-        # fully-warm cache: zero search calls, zero engine stages
-        miss_matches = spark.createDataFrame([], MatchEngine._match_schema())
-    else:
-        miss_matches = engine.compute_matches(misses, playlist_map)
-    all_matches = hit_matches.unionByName(miss_matches.select(*hit_matches.columns))
-
-    new_entries = cache_entries(miss_matches, misses)
-
     if grouped_others is not None:
-        g_keyed = grouped_others.withColumn("log_id", F.element_at("log_ids", 1))
-        g_hits = g_keyed.join(
-            cache.withColumnRenamed("video_id", "youtube_playlist_id"),
+        g_matches, g_entries = _cached_pass(
+            cache,
+            grouped_others.withColumn("log_id", F.element_at("log_ids", 1)),
             "youtube_playlist_id",
-            "inner",
-        )
-        g_misses = g_keyed.drop("log_id").join(
-            cache.select(F.col("video_id").alias("youtube_playlist_id")),
-            "youtube_playlist_id",
-            "left_anti",
-        )
-        g_hit_matches = (
-            g_hits.filter(F.col("payload").isNotNull())
-            .withColumn("__m__", F.from_json("payload", PAYLOAD_SCHEMA))
-            .select(
+            lambda hits: hits.select(
                 "log_id",
+                "payload",
                 F.lit("LM").alias("user_playlist_id"),
-                *[F.col(f"__m__.{c}").alias(c) for c in PAYLOAD_FIELDS],
-                F.col("log_ids"),
+                "log_ids",
                 F.lit(1).alias("pass_no"),
-            )
-        )
-        g_miss_matches = engine.compute_matches_others(g_misses)
-        all_matches = all_matches.unionByName(g_hit_matches).unionByName(
-            g_miss_matches.select(*hit_matches.columns)
-        )
-        # group entries reuse the video cache shape with the playlist
-        # id in the key column
-        g_new = cache_entries(
-            g_miss_matches,
-            g_misses.select(
-                F.element_at("log_ids", 1).alias("log_id"),
-                F.col("youtube_playlist_id").alias("video_id"),
             ),
+            engine.compute_matches_others,
         )
-        new_entries = new_entries.unionByName(g_new)
+        matches = matches.unionByName(g_matches)
+        new_entries = new_entries.unionByName(g_entries)
 
-    result = engine.assemble(all_matches, liked_tracks, liked_albums)
+    result = engine.assemble(matches, liked_tracks, liked_albums)
     # misses are disjoint from the cache by construction; keep the
     # merge an explicit prefer-new anti-join rather than an arbitrary
     # dropDuplicates so re-merging the same run is idempotent
@@ -199,3 +182,37 @@ def match_with_cache(
         new_entries
     )
     return result, merged
+
+
+def _cached_pass(
+    cache: DataFrame,
+    rows: DataFrame,
+    key: str,
+    on_hit: Callable[[DataFrame], DataFrame],
+    compute: Callable[[DataFrame], DataFrame],
+) -> tuple[DataFrame, DataFrame]:
+    """One match pass over ``rows`` (which carry ``log_id``), looked up
+    in the cache by ``key``: hits replay their payload, misses run
+    ``compute``.  ``on_hit`` maps the non-negative hits to (log_id,
+    payload, user_playlist_id, log_ids, pass_no).  Returns (match rows,
+    new cache entries); entries of every pass share the video cache
+    shape with the pass's key in the ``video_id`` column."""
+    keyed = cache.withColumnRenamed("video_id", key)
+    hits = rows.join(keyed, key, "inner")
+    misses = rows.join(keyed.select(key), key, "left_anti")
+    hit_matches = (
+        on_hit(hits.filter(F.col("payload").isNotNull()))  # negative entries: known not-found
+        .withColumn("__m__", F.from_json("payload", PAYLOAD_SCHEMA))
+        .select(
+            "log_id",
+            "user_playlist_id",
+            *[F.col(f"__m__.{c}").alias(c) for c in PAYLOAD_FIELDS],
+            "log_ids",
+            "pass_no",
+        )
+    )
+    miss_matches = compute(misses)
+    entries = cache_entries(
+        miss_matches, misses.select("log_id", F.col(key).alias("video_id"))
+    )
+    return hit_matches.unionByName(miss_matches.select(*hit_matches.columns)), entries

@@ -202,38 +202,31 @@ class CatalogCandidateSource:
         )
 
     def _album_items(self) -> DataFrame:
-        children = (
-            self.tracks.filter(F.col("album_uri").isNotNull())
-            .groupBy("album_uri")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("track_uri"),
-                            F.col("track_title"),
-                            F.col("duration_ms"),
-                            F.col("track_artists"),
-                            F.col("album_uri"),
-                        )
-                    )
-                ).alias("children")
-            )
-        )
-        return self.albums.join(children, "album_uri", "left").select(
+        return self._with_children(self.albums, "album_uri").select(
             F.col("album_uri").alias("item_uri"),
             F.col("album_title").alias("item_title"),
             F.split(F.col("album_artists"), "; ").alias("item_artists"),
             F.col("duration_ms").alias("item_duration_ms"),
             F.col("album_uri"),
-            F.coalesce(
-                "children", F.array().cast(CANDIDATE_SCHEMA["children"].dataType)
-            ).alias("children"),
+            "children",
         )
 
     def _playlist_items(self) -> DataFrame:
+        return self._with_children(self.playlists, "playlist_uri").select(
+            F.col("playlist_uri").alias("item_uri"),
+            F.col("playlist_title").alias("item_title"),
+            F.array(F.col("playlist_owner")).alias("item_artists"),
+            F.col("duration_ms").alias("item_duration_ms"),
+            F.lit(None).cast("string").alias("album_uri"),
+            "children",
+        )
+
+    def _with_children(self, collections: DataFrame, key: str) -> DataFrame:
+        """``collections`` plus ``children``: the catalog tracks whose
+        ``key`` is the collection's, sorted; empty when there are none."""
         children = (
-            self.tracks.filter(F.col("playlist_uri").isNotNull())
-            .groupBy("playlist_uri")
+            self.tracks.filter(F.col(key).isNotNull())
+            .groupBy(key)
             .agg(
                 F.array_sort(
                     F.collect_list(
@@ -248,15 +241,9 @@ class CatalogCandidateSource:
                 ).alias("children")
             )
         )
-        return self.playlists.join(children, "playlist_uri", "left").select(
-            F.col("playlist_uri").alias("item_uri"),
-            F.col("playlist_title").alias("item_title"),
-            F.array(F.col("playlist_owner")).alias("item_artists"),
-            F.col("duration_ms").alias("item_duration_ms"),
-            F.lit(None).cast("string").alias("album_uri"),
-            F.coalesce(
-                "children", F.array().cast(CANDIDATE_SCHEMA["children"].dataType)
-            ).alias("children"),
+        return collections.join(children, key, "left").withColumn(
+            "children",
+            F.coalesce("children", F.array().cast(CANDIDATE_SCHEMA["children"].dataType)),
         )
 
 

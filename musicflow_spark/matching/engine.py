@@ -20,11 +20,11 @@ Here each stage is a DataFrame transform:
                       log_id order per SURVEY §7 watch-list #6)
 - guarded upsert    -> prefer-non-null playlist_uri window (A8)
 
-Cost note (SURVEY §7 watch-list #4): eager mode evaluates all
-strategies set-at-a-time — optimal when search is a local catalog
-join.  lazy=True runs priority rounds only for still-missing videos,
-preserving the reference's miss-driven API-call count for paid
-sources.
+Cost note (SURVEY §7 watch-list #4): every strategy of every video
+is searched set-at-a-time — optimal when search is a local catalog
+join.  The reference's miss-driven cascade searches a later strategy
+only when earlier ones missed, which is what a per-call-billed source
+wants; such a source would choose its rounds itself.
 """
 
 from __future__ import annotations
@@ -116,10 +116,9 @@ def _q_expr(template: str) -> F.Column:
 
 
 class MatchEngine:
-    def __init__(self, cfg: PipelineConfig, source: CandidateSource, lazy: bool = False):
+    def __init__(self, cfg: PipelineConfig, source: CandidateSource):
         self.cfg = cfg
         self.source = source
-        self.lazy = lazy
 
     # ------------------------------------------------------------ public
     def match(
@@ -149,6 +148,9 @@ class MatchEngine:
         frame (``_match_schema`` shape) across the track/album/
         playlist branches.  Split out so the cache layer (cache.py)
         can bypass it for cache-hit videos."""
+        if videos.isEmpty():
+            # nothing to search (a fully-warm cache): zero search calls
+            return videos.sparkSession.createDataFrame([], self._match_schema())
         # prepared and the per-kind winner sets each feed 2+ downstream
         # consumers (the album winners gate the playlist pass; assembly
         # unions all three and fans into 7 outputs).  Materialize them
@@ -164,22 +166,8 @@ class MatchEngine:
             coll_videos = prepared.filter(F.col("duration_ms") >= th)
 
         track_matches = self._match_tracks(track_videos).localCheckpoint(eager=True)
-        album_matches = self._match_collections(coll_videos, kind="album").localCheckpoint(
-            eager=True
-        )
-        # playlist search only for videos the album pass missed
-        # (reference: find_other_playlist runs when find_album returns
-        # nothing, spotify_elt.py:826-834)
-        coll_missing = coll_videos.join(
-            album_matches.select("log_id"), "log_id", "left_anti"
-        )
-        playlist_matches = self._match_collections(
-            coll_missing, kind="playlist"
-        ).localCheckpoint(eager=True)
-
-        return (
-            track_matches.unionByName(album_matches, allowMissingColumns=True)
-            .unionByName(playlist_matches, allowMissingColumns=True)
+        return track_matches.unionByName(
+            self._match_album_then_playlist(coll_videos), allowMissingColumns=True
         )
 
     def compute_matches_others(self, grouped: DataFrame) -> DataFrame:
@@ -209,12 +197,22 @@ class MatchEngine:
             .withColumn("log_id", F.element_at("log_ids", 1))
             .localCheckpoint(eager=True)
         )
+        return self._match_album_then_playlist(
+            prepared, strategies=OTHERS_COLLECTION_STRATEGIES, grouped=True
+        )
+
+    def _match_album_then_playlist(
+        self, videos: DataFrame, strategies=COLLECTION_STRATEGIES, grouped: bool = False
+    ) -> DataFrame:
+        """The collection cascade: albums, then playlists only for the
+        rows the album pass missed (reference: find_other_playlist runs
+        when find_album returns nothing, spotify_elt.py:826-834)."""
         album_matches = self._match_collections(
-            prepared, kind="album", strategies=OTHERS_COLLECTION_STRATEGIES, grouped=True
+            videos, "album", strategies, grouped
         ).localCheckpoint(eager=True)
-        missing = prepared.join(album_matches.select("log_id"), "log_id", "left_anti")
+        missing = videos.join(album_matches.select("log_id"), "log_id", "left_anti")
         playlist_matches = self._match_collections(
-            missing, kind="playlist", strategies=OTHERS_COLLECTION_STRATEGIES, grouped=True
+            missing, "playlist", strategies, grouped
         ).localCheckpoint(eager=True)
         return album_matches.unionByName(playlist_matches)
 
@@ -263,11 +261,6 @@ class MatchEngine:
 
     def _match_tracks(self, videos: DataFrame) -> DataFrame:
         strat = self._strategy_rows(videos, TRACK_STRATEGIES)
-        if self.lazy:
-            return self._rounds(
-                strat, videos, kind="track", n_pri=len(TRACK_STRATEGIES),
-                limit=self.cfg.search_limit_tracks,
-            )
         cands = self.source.search(
             strat.select("qid", "q"), "track", self.cfg.search_limit_tracks
         ).filter(F.col("result_rank") == 1)
@@ -330,14 +323,6 @@ class MatchEngine:
         if videos.isEmpty():
             return videos.sparkSession.createDataFrame([], self._match_schema())
         strat = self._strategy_rows(videos, strategies)
-        if self.lazy:
-            # miss-driven rounds apply to collection searches too —
-            # the reference's find_album/find_other_playlist only fire
-            # later strategies when earlier ones returned nothing
-            return self._rounds(
-                strat, videos, kind=kind, n_pri=len(strategies),
-                limit=self.cfg.search_limit_albums, grouped=grouped,
-            )
         cands = self.source.search(
             strat.select("qid", "q"), kind, self.cfg.search_limit_albums
         ).filter(F.col("result_rank") == 1)
@@ -443,56 +428,6 @@ class MatchEngine:
             .drop("rn", "accepted", "priority")
             .withColumn("kind", F.lit(kind))
         )
-
-    def _rounds(
-        self,
-        strat: DataFrame,
-        videos: DataFrame,
-        kind: str,
-        n_pri: int,
-        limit: int,
-        grouped: bool = False,
-    ) -> DataFrame:
-        """Miss-driven evaluation: one search round per priority over
-        still-missing videos only (preserves the reference's API-call
-        cost model).  Same output as the eager path."""
-        spark = strat.sparkSession
-        remaining = videos.select("log_id")
-        accepted_parts: list[DataFrame] = []
-        tries = videos.select("log_id").withColumn("tries", F.lit(0))
-        for p in range(n_pri):
-            round_q = strat.filter(F.col("priority") == p).join(remaining, "log_id", "left_semi")
-            if round_q.isEmpty():
-                continue
-            cands = self.source.search(
-                round_q.select("qid", "q"), kind, limit
-            ).filter(F.col("result_rank") == 1)
-            joined = round_q.join(cands, "qid", "inner")
-            scored = (
-                self._score_tracks(joined)
-                if kind == "track"
-                else self._score_collections(joined, kind, grouped)
-            )
-            scored = scored.localCheckpoint(eager=True)
-            got = scored.select("log_id").distinct()
-            tries = (
-                tries.join(got.withColumn("hit", F.lit(1)), "log_id", "left")
-                .withColumn("tries", F.col("tries") + F.coalesce("hit", F.lit(0)))
-                .drop("hit")
-            )
-            acc = scored.filter(F.col("accepted")).join(tries, "log_id")
-            accepted_parts.append(
-                acc.withColumn("found_on_try", F.col("tries").cast("long"))
-                .drop("tries", "accepted", "priority")
-                .withColumn("kind", F.lit(kind))
-            )
-            remaining = remaining.join(acc.select("log_id"), "log_id", "left_anti")
-        if not accepted_parts:
-            return spark.createDataFrame([], self._match_schema())
-        out = accepted_parts[0]
-        for part in accepted_parts[1:]:
-            out = out.unionByName(part)
-        return out
 
     @staticmethod
     def _match_schema() -> str:

@@ -458,7 +458,8 @@ def nearest_centroids(
     top: int,
 ) -> DataFrame:
     """Each row's ``top`` nearest centroids by squared L2 (argmin is
-    norm-free; ties by cluster_id).  The centroid table is
+    norm-free; ties by cluster_id).  Assumes finite vectors, the
+    precondition of the Arrow tier below.  The centroid table is
     dimension-sized by contract -> broadcast; per-row work is a
     1-row-vs-centroids plane broadcast, not a data-sized cross join."""
     scored = df.crossJoin(F.broadcast(centroids)).select(
@@ -506,8 +507,10 @@ def nearest_centroid_ids_arrow(
     break (d2, cluster_id): ``cent_rows`` is required sorted by
     cluster_id and ``np.argmin`` takes the first minimum — the same
     lexicographic rule as the native row_number window.  Assumes
-    NaN-free vectors (the corpus contract everywhere else; the
-    native window would order NaN d² last, np.argmin would pick it).
+    finite vectors (the corpus contract everywhere else; the native
+    window would order NaN d² last, np.argmin would pick it, and an
+    infinite component makes every d² tie at inf); a non-finite
+    vector raises.
 
     ``cent_rows``: list of (cluster_id, centroid: list[double]) —
     dimension-bounded by the same contract that lets the native tier
@@ -542,7 +545,7 @@ def nearest_centroid_ids_arrow(
                 .astype(_np.float64, copy=False)
                 .reshape(n, dim)
             )
-            # ADVICE r13: enforce the documented NaN-free contract —
+            # ADVICE r13: enforce the documented finite-vector contract —
             # the native window orders NaN d² LAST while np.argmin
             # would pick it, so a contract violation must error, not
             # silently flip an assignment (O(n·dim) check vs the

@@ -5,14 +5,13 @@ dbt-style materialization policy.
 
 - ``ephemeral``  -> stays a lazy DataFrame (Catalyst inlines it
                     downstream, like dbt's ephemeral CTE inlining)
-- ``view``       -> createOrReplaceTempView (dbt staging default)
 - ``table``      -> written parquet to the warehouse dir and re-read
                     (dbt marts default; the read-back truncates
                     lineage exactly where dbt materializes)
 
 Airflow itself stays optional by design: each Task.fn is a plain
-callable, so wrapping one in an @task decorator is a one-liner in a
-deployment repo.  Nothing here imports airflow.
+callable, and airflow_dags.to_airflow wraps a Pipeline's tasks in
+@task decorators.  Nothing here imports airflow.
 """
 
 from __future__ import annotations
@@ -29,7 +28,8 @@ from pyspark.sql import functions as F
 @dataclass
 class Task:
     name: str
-    fn: Callable[[dict], dict[str, DataFrame]]
+    #: ctx -> outputs (model name -> DataFrame or any plain value)
+    fn: Callable[[dict], dict | None]
     deps: tuple[str, ...] = ()
     #: materialization per output model name; default ephemeral
     materialize: dict[str, str] = field(default_factory=dict)
@@ -39,10 +39,11 @@ class Task:
 class Pipeline:
     """Dependency-ordered task execution over a shared model context.
 
-    ``run`` returns the context: every model name -> DataFrame, with
-    'table' models re-read from their written parquet."""
+    ``run`` returns the context: every model name -> its output, with
+    'table' models re-read from their written parquet.  ``name`` is the
+    DAG id an Airflow deployment schedules it under (airflow_dags.py)."""
 
-    spark: SparkSession
+    name: str
     warehouse_dir: str | None = None
     tasks: list[Task] = field(default_factory=list)
     #: per-table-model run metrics (rows written), populated by run():
@@ -54,22 +55,23 @@ class Pipeline:
         self.tasks.append(task)
         return self
 
-    def run(self, initial: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
+    def run(self, initial: dict | None = None) -> dict:
         by_name = {t.name: t for t in self.tasks}
         order = TopologicalSorter({t.name: set(t.deps) for t in self.tasks})
-        ctx: dict[str, DataFrame] = dict(initial or {})
+        ctx = dict(initial or {})
         for name in order.static_order():
-            task = by_name[name]
-            outputs = task.fn(ctx) or {}
-            for model, df in outputs.items():
-                ctx[model] = self._materialize(model, df, task.materialize.get(model, "ephemeral"))
+            ctx.update(self.run_task(by_name[name], ctx))
         return ctx
+
+    def run_task(self, task: Task, ctx: dict) -> dict:
+        """One task over ``ctx``: its outputs, each materialized."""
+        return {
+            model: self._materialize(model, df, task.materialize.get(model, "ephemeral"))
+            for model, df in (task.fn(ctx) or {}).items()
+        }
 
     def _materialize(self, model: str, df: DataFrame, how: str) -> DataFrame:
         if how == "ephemeral":
-            return df
-        if how == "view":
-            df.createOrReplaceTempView(model)
             return df
         if how == "table":
             if not self.warehouse_dir:
@@ -80,7 +82,7 @@ class Pipeline:
                 "overwrite"
             ).parquet(path)
             self.metrics[model] = obs.get
-            return self.spark.read.parquet(path)
+            return df.sparkSession.read.parquet(path)
         raise ValueError(f"unknown materialization {how!r} for {model}")
 
 
@@ -91,18 +93,13 @@ def musicflow_pipeline(
     candidate_source,
     warehouse_dir: str,
     cache_path: str | None = None,
-    materializations: dict[str, str] | None = None,
 ) -> Pipeline:
     """The full reference flow as one Pipeline: extract-normalize ->
     match (cache-aware) -> load entity tables -> staged models ->
     intermediates/marts/analyses.  Mirrors the Airflow task boundaries
     (youtube extract / spotify match / dbt run) without importing
-    Airflow.
-
-    ``materializations`` overrides the per-model choice
-    (model name -> 'ephemeral' | 'view' | 'table'), the dbt
-    per-model-header / dbt_project.yml:24-33 config surface; defaults
-    stay the dbt-equivalent ones (marts + engine tables as 'table')."""
+    Airflow.  Materializations are the dbt-equivalent ones: engine
+    tables and marts as 'table', everything else ephemeral."""
     from pyspark.sql import functions as F
 
     from musicflow_spark.matching import MatchEngine, load_cache, match_with_cache, save_cache
@@ -192,8 +189,7 @@ def musicflow_pipeline(
         }
         if cache_path:
             # materialize results BEFORE the cache flush: their lineage
-            # reads the old cache files, which save_cache atomically
-            # replaces
+            # reads the old cache files, which save_cache swaps out
             outputs = {k: df.localCheckpoint(eager=True) for k, df in outputs.items()}
             save_cache(new_cache, cache_path)
         return outputs
@@ -213,44 +209,15 @@ def musicflow_pipeline(
         }
         return build_all(model_sources, cfg)
 
-    marts = ("log_found_videos", "log_not_found_videos", "log_for_tableau")
-    overrides = dict(materializations or {})
-    extract_models = ("src__youtube_playlists", "src__youtube_videos", "src__youtube_library")
-    match_models = ("spotify_log", "spotify_tracks", "spotify_albums", "spotify_playlists_others")
-
-    def mat(defaults: dict[str, str], owned: tuple[str, ...]) -> dict[str, str]:
-        # per-model override wins over the task default; overrides may
-        # also promote this task's ephemeral-by-default models
-        out = dict(defaults)
-        out.update({m: how for m, how in overrides.items() if m in owned})
-        return out
-
+    match_tables = dict.fromkeys(
+        ("spotify_log", "spotify_tracks", "spotify_albums", "spotify_playlists_others"), "table"
+    )
+    mart_tables = dict.fromkeys(
+        ("log_found_videos", "log_not_found_videos", "log_for_tableau"), "table"
+    )
     return (
-        Pipeline(spark, warehouse_dir)
-        .add(Task("extract", extract, materialize=mat({}, extract_models)))
-        .add(
-            Task(
-                "match",
-                match,
-                deps=("extract",),
-                materialize=mat({m: "table" for m in match_models}, match_models),
-            )
-        )
-        .add(
-            Task(
-                "models",
-                models,
-                deps=("match",),
-                # every dbt-layer model is produced by this task, so
-                # any override key that is not an extract/match output
-                # belongs here (staging views, intermediates, marts)
-                materialize=mat(
-                    {m: "table" for m in marts},
-                    tuple(
-                        m for m in overrides
-                        if m not in extract_models and m not in match_models
-                    ),
-                ),
-            )
-        )
+        Pipeline("musicflow_elt_dag", warehouse_dir)
+        .add(Task("extract", extract))
+        .add(Task("match", match, deps=("extract",), materialize=match_tables))
+        .add(Task("models", models, deps=("match",), materialize=mart_tables))
     )

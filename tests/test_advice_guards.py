@@ -1,5 +1,6 @@
-"""ADVICE r13 guard tests: the four low-severity contract gaps in
-operators/similarity.py now fail loudly instead of silently diverging."""
+"""ADVICE guard tests: the low-severity contract gaps in
+operators/similarity.py (r13) and tools/perf_tables.py (r14) now fail
+loudly instead of silently diverging."""
 
 from __future__ import annotations
 
@@ -59,3 +60,26 @@ def test_pq_encode_arrow_preserves_id_type(spark):
     assert out.schema["neighbor_id"].dataType.simpleString() == "int"
     rows = {r["neighbor_id"]: list(r["codes"]) for r in out.collect()}
     assert rows == {7: [0], 9: [1]}
+
+
+@pytest.mark.parametrize(
+    "a_control, b_queries, msg",
+    [(0.0, {"q1": 1.0}, "not positive"), (1.0, {"q2": 1.0}, "share no query")],
+    ids=["zero_control", "no_shared_query"],
+)
+def test_perf_tables_rejects_unusable_records(tmp_path, monkeypatch, a_control, b_queries, msg):
+    import importlib.util
+    import json
+    import pathlib
+    import sys
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "perf_tables.py"
+    spec = importlib.util.spec_from_file_location("perf_tables", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    a, b = tmp_path / "a.json", tmp_path / "b.json"
+    a.write_text(json.dumps({"queries": {"q1": 2.0}, "control": {"sec": a_control}}))
+    b.write_text(json.dumps({"queries": b_queries, "control": {"sec": 1.0}}))
+    monkeypatch.setattr(sys, "argv", ["perf_tables.py", str(a), str(b)])
+    with pytest.raises(SystemExit, match=msg):
+        mod.main()

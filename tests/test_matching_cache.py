@@ -93,6 +93,24 @@ def test_warm_cache_reproduces_cold_run_without_search(spark, setup, tmp_path):
     assert cache2.count() == cache.count()
 
 
+@pytest.mark.parametrize("left_over", ["__tmp__", "__old__"])
+def test_load_cache_recovers_an_interrupted_swap(spark, tmp_path, left_over):
+    # a crash inside save_cache's swap can leave the full cache only in
+    # the new (tmp) dir or only in the moved-aside (old) dir
+    path = str(tmp_path / "match_cache")
+    entries = spark.createDataFrame([("v1", None), ("PL_x", "{}")], "video_id string, payload string")
+    entries.write.parquet(f"{path}.{left_over}")
+    assert {r["video_id"] for r in load_cache(spark, path).collect()} == {"v1", "PL_x"}
+
+
+def test_save_cache_swap_leaves_only_the_new_cache(spark, tmp_path):
+    path = str(tmp_path / "match_cache")
+    save_cache(spark.createDataFrame([("v1", None)], "video_id string, payload string"), path)
+    save_cache(spark.createDataFrame([("v2", None)], "video_id string, payload string"), path)
+    assert [r["video_id"] for r in load_cache(spark, path).collect()] == ["v2"]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["match_cache"]
+
+
 @pytest.mark.slow
 def test_only_new_videos_are_searched(spark, setup):
     source, videos, playlist_map = setup

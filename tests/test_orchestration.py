@@ -1,4 +1,4 @@
-"""Airflow-adapter specs, per-model materialization overrides, and
+"""Reference DAGs as Pipelines, the engine pipeline's task graph, and
 the auth/token retry contract — the deployment-surface layer."""
 
 from __future__ import annotations
@@ -6,12 +6,11 @@ from __future__ import annotations
 import pytest
 
 from musicflow_spark.plans.airflow_dags import (
-    DagSpec,
-    pipeline_dag_spec,
     setup_dag_spec,
     unlike_dag_spec,
     ytmusicapi_dag_spec,
 )
+from musicflow_spark.plans.dag import Pipeline, Task
 from musicflow_spark.sources.auth import (
     AuthError,
     TokenProvider,
@@ -34,37 +33,37 @@ def test_ytmusicapi_dag_topology_and_handoff():
         assert ctx["album_temp"] == {"b1": "MPRE_b1"}
         return {"videos_loaded": True}
 
-    spec = ytmusicapi_dag_spec(playlists, videos)
-    assert spec.topo_order() == ["altyoutube_playlists", "altyoutube_videos"]
-    ctx = spec.run()
+    pipe = ytmusicapi_dag_spec(playlists, videos)
+    assert pipe.name == "ytmusicapi_dag"
+    pipe.tasks.reverse()  # only the deps may order the run
+    ctx = pipe.run()
     assert seen == ["playlists", "videos"] and ctx["videos_loaded"]
 
 
 def test_setup_and_unlike_dag_shapes():
     store = {}
-    spec = setup_dag_spec(
+    pipe = setup_dag_spec(
         get_auth_code=lambda: "CODE",
         mint_refresh_token=lambda code: f"RT-{code}",
         set_variable=store.__setitem__,
     )
-    spec.run()
+    assert pipe.run()["refresh_token"] == "RT-CODE"
     assert store == {"REFRESH_TOKEN": "RT-CODE"}
 
     order = []
-    spec = unlike_dag_spec(
+    pipe = unlike_dag_spec(
         "tracks",
         auth=lambda ctx: order.append("auth"),
         populate=lambda ctx: order.append("populate"),
         unlike=lambda ctx: order.append("unlike"),
     )
-    assert spec.topo_order() == [
-        "auth_with_refresh_token", "populate_tracks_uri", "unlike_tracks",
-    ]
-    spec.run()
+    assert pipe.name == "spotify_unlike_tracks_dag"
+    pipe.tasks.reverse()  # only the deps may order the run
+    pipe.run()
     assert order == ["auth", "populate", "unlike"]
 
 
-def test_pipeline_dag_spec_matches_pipeline_topology(spark, musicflow_sources, tmp_path):
+def test_musicflow_pipeline_task_graph(spark, musicflow_sources, tmp_path):
     from musicflow_spark.config import PipelineConfig
     from musicflow_spark.matching import CatalogCandidateSource
     from musicflow_spark.plans.dag import musicflow_pipeline
@@ -80,56 +79,27 @@ def test_pipeline_dag_spec_matches_pipeline_topology(spark, musicflow_sources, t
         ),
         str(tmp_path / "wh"),
     )
-    spec = pipeline_dag_spec(pipe)
-    # identical task graph, task for task
-    from graphlib import TopologicalSorter
+    # the reference's youtube-extract / spotify-match / dbt-run
+    # boundaries; engine tables and marts are the 'table' models
+    assert [(t.name, t.deps) for t in pipe.tasks] == [
+        ("extract", ()), ("match", ("extract",)), ("models", ("match",)),
+    ]
+    assert [sorted(t.materialize) for t in pipe.tasks] == [
+        [],
+        ["spotify_albums", "spotify_log", "spotify_playlists_others", "spotify_tracks"],
+        ["log_for_tableau", "log_found_videos", "log_not_found_videos"],
+    ]
+    assert {how for t in pipe.tasks for how in t.materialize.values()} == {"table"}
 
-    want = list(TopologicalSorter({t.name: set(t.deps) for t in pipe.tasks}).static_order())
-    assert spec.topo_order() == want == ["extract", "match", "models"]
 
-
-def test_dagspec_rejects_cycles():
-    spec = DagSpec("bad").add("a", lambda c: None, deps=("b",)).add(
-        "b", lambda c: None, deps=("a",)
+def test_pipeline_rejects_cycles():
+    pipe = Pipeline("bad").add(Task("a", lambda c: None, deps=("b",))).add(
+        Task("b", lambda c: None, deps=("a",))
     )
     import graphlib
 
     with pytest.raises(graphlib.CycleError):
-        spec.topo_order()
-
-
-# ------------------------------------- per-model materialization config
-@pytest.mark.slow
-def test_materialization_overrides(spark, musicflow_sources, tmp_path):
-    import os
-
-    from musicflow_spark.config import PipelineConfig
-    from musicflow_spark.matching import CatalogCandidateSource
-    from musicflow_spark.plans.dag import musicflow_pipeline
-
-    wh = str(tmp_path / "wh")
-    pipe = musicflow_pipeline(
-        spark,
-        musicflow_sources,
-        PipelineConfig(),
-        CatalogCandidateSource(
-            musicflow_sources["spotify_tracks"],
-            musicflow_sources["spotify_albums"],
-            musicflow_sources["spotify_playlists_others"],
-        ),
-        wh,
-        materializations={
-            # demote a mart to view, promote an intermediate to table
-            "log_for_tableau": "view",
-            "int_join_spotify_uris": "table",
-        },
-    )
-    ctx = pipe.run()
-    assert os.path.isdir(os.path.join(wh, "int_join_spotify_uris"))
-    assert not os.path.isdir(os.path.join(wh, "log_for_tableau"))
-    # demoted mart still queryable as a temp view, row-identical
-    via_view = spark.table("log_for_tableau").count()
-    assert via_view == ctx["log_for_tableau"].count()
+        pipe.run()
 
 
 # ------------------------------------------------- auth/retry contract
@@ -194,45 +164,14 @@ def test_auth_retry_bounded_backoff_on_429():
     assert sleeps == [1.0, 2.0, 4.0]  # exponential, then give up
 
 
-@pytest.mark.slow
-def test_pipeline_dag_spec_executes_end_to_end(spark, musicflow_sources, tmp_path):
-    """Running the DAG-spec form must produce the same warehouse as
-    Pipeline.run — the adapter executes, not just topo-sorts."""
-    import os
-
-    from musicflow_spark.config import PipelineConfig
-    from musicflow_spark.matching import CatalogCandidateSource
-    from musicflow_spark.plans.dag import musicflow_pipeline
-
-    wh = str(tmp_path / "wh_spec")
-    pipe = musicflow_pipeline(
-        spark,
-        musicflow_sources,
-        PipelineConfig(),
-        CatalogCandidateSource(
-            musicflow_sources["spotify_tracks"],
-            musicflow_sources["spotify_albums"],
-            musicflow_sources["spotify_playlists_others"],
-        ),
-        wh,
-    )
-    ctx = pipeline_dag_spec(pipe).run()
-    assert os.path.isdir(os.path.join(wh, "log_for_tableau"))
-    assert ctx["spotify_log"].count() > 0
-    total = ctx["src__youtube_library"].count()
-    assert total == ctx["int_join_spotify_uris"].count() + ctx["log_not_found_videos"].count()
-
-
 def test_table_materialization_observes_row_metrics(spark, tmp_path):
     """Table-materialized models must report their written row count
     through Pipeline.metrics — collected via df.observe ON the write
     action, so no second scan happens."""
-    from musicflow_spark.plans.dag import Pipeline, Task
-
     def make(ctx):
         return {"m": spark.range(37).withColumnRenamed("id", "k")}
 
-    pipe = Pipeline(spark, warehouse_dir=str(tmp_path)).add(
+    pipe = Pipeline("metrics", warehouse_dir=str(tmp_path)).add(
         Task("build", make, materialize={"m": "table"})
     )
     ctx = pipe.run()

@@ -42,6 +42,7 @@ def test_marts_materialized_as_parquet(pipeline_run):
 
 def test_engine_log_feeds_models_consistently(pipeline_run):
     _, ctx, _ = pipeline_run
+    assert ctx["spotify_log"].count() > 0
     # conservation: every library row is found or not-found
     total = ctx["src__youtube_library"].count()
     found = ctx["int_join_spotify_uris"].count()

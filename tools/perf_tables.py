@@ -17,7 +17,8 @@ Usage:
 Prints a markdown table of raw and control-normalized seconds for every
 query present in both records, the normalized speedup (>1 = B faster),
 and geomean rows.  Exits non-zero if either record lacks a usable
-control (so a truncated record can never silently produce a table).
+(positive) control or the records share no query (so a truncated
+record can never silently produce a table).
 """
 from __future__ import annotations
 
@@ -41,14 +42,18 @@ def control_sec(rec: dict, path: str, override: str | None) -> float:
     if override is not None:
         if override not in rec["queries"]:
             raise SystemExit(f"{path}: control override {override!r} not in queries")
-        return float(rec["queries"][override])
-    ctl = rec.get("control")
-    if not isinstance(ctl, dict) or "sec" not in ctl:
-        raise SystemExit(
-            f"{path}: no control block; pass --control-a/--control-b to pick a "
-            "control query present in the record"
-        )
-    return float(ctl["sec"])
+        sec = float(rec["queries"][override])
+    else:
+        ctl = rec.get("control")
+        if not isinstance(ctl, dict) or "sec" not in ctl:
+            raise SystemExit(
+                f"{path}: no control block; pass --control-a/--control-b to pick a "
+                "control query present in the record"
+            )
+        sec = float(ctl["sec"])
+    if not sec > 0:
+        raise SystemExit(f"{path}: control time {sec!r}s is not positive; cannot normalize")
+    return sec
 
 
 def geomean(xs: list[float]) -> float:
@@ -73,6 +78,8 @@ def main() -> int:
     shared = sorted(set(a["queries"]) & set(b["queries"]))
     only_a = sorted(set(a["queries"]) - set(b["queries"]))
     only_b = sorted(set(b["queries"]) - set(a["queries"]))
+    if not shared:
+        raise SystemExit(f"{args.record_a} and {args.record_b} share no query; nothing to compare")
 
     print(f"<!-- A={args.record_a} control={ca:.3f}s  "
           f"B={args.record_b} control={cb:.3f}s  shared={len(shared)} -->")
@@ -89,7 +96,7 @@ def main() -> int:
     tot_b = sum(r[3] for r in rows)
     print(f"| **total (shared)** | {tot_a:.2f} | {tot_b:.2f} | "
           f"{tot_a / ca:.1f} | {tot_b / cb:.1f} | "
-          f"{(tot_a / ca) / (tot_b / cb):.2f} |")
+          f"{(tot_a / ca) / (tot_b / cb) if tot_b > 0 else float('nan'):.2f} |")
     print(f"\nGeomean normalized speedup (A/B, >1 = B faster): "
           f"**{geomean([r[0] for r in rows]):.3f}**; "
           f"raw geomean {geomean([r[2] / r[3] for r in rows if r[3] > 0]):.3f}.")
